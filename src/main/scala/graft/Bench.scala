@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. `value` is the total seconds across all registered
@@ -129,14 +130,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.FuseDotProduct)
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
+    // Untimed passes are best-effort, but a failure must be VISIBLE
+    // (stderr, never stdout — the driver tails stdout for the JSON line):
+    // a failed stored-artifact pre-build makes the timed sample silently
+    // pay the full build and record it as a fast-path measurement.
+    def logFailure(what: String, e: Throwable): Unit =
+      System.err.println(
+        s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
+    def warmup(tag: String)(f: => Any): Unit =
+      try { f; () }
+      catch { case NonFatal(e) => logFailure(s"$tag warmup", e) }
     // Untimed warmup: JIT, codegen cache, parquet footer/file-index reads,
     // OS page cache for EVERY fixture table — otherwise whichever query
     // first touches a table absorbs its listing+footer+disk cost and the
@@ -153,31 +158,19 @@ object Bench {
     // per-table try: one absent/broken table must not abort warming the rest
     locally {
       import org.apache.spark.sql.functions.{col, count}
-      graft.sources.Tables.all.foreach(t =>
-        try {
-          val df = graft.sources.Tables.load(spark, sfDir, t)
-          val aggs = df.columns.map(c => count(col(c)))
-          df.agg(aggs.head, aggs.tail: _*).collect()
-        }
-        catch { case _: Throwable => () })
+      graft.sources.Tables.all.foreach(t => warmup(s"table $t") {
+        val df = graft.sources.Tables.load(spark, sfDir, t)
+        val aggs = df.columns.map(c => count(col(c)))
+        df.agg(aggs.head, aggs.tail: _*).collect()
+      })
     }
-    try SparkEntry.queries("q01_dim_decode_join")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    warmup("q01_dim_decode_join")(
+      SparkEntry.queries("q01_dim_decode_join")(spark, sfDir).count())
     // d22's serving contract: the prior converged assignment and band
     // index PRE-EXIST the ingest being priced (a deployment's build job
     // wrote them yesterday). Pre-build the stored prior untimed so the
     // d22 sample prices only the incremental maintenance pass — the
     // full-rebuild cost is what d07's own entry prices.
-    // a failed stored-artifact pre-build must be VISIBLE (stderr, never
-    // stdout — the driver tails stdout for the JSON line): the timed
-    // d22/s22 samples would silently rebuild the artifacts inside the
-    // timed window and record the full build as a fast-path measurement
-    def warmup(tag: String)(f: => Any): Unit =
-      try { f; () }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $tag warmup failed (the timed " +
-          s"sample will pay the build): ${e.getMessage}")
-      }
     warmup("d22 stored prior")(ExtensionQueries8.d22PriorRoot(spark, sfDir))
     // d29's serving contract: the prior entity table and name-key index
     // pre-exist the ingest being priced (yesterday's build job); d28's
@@ -214,11 +207,12 @@ object Bench {
     // query (pre-r10, a pass-2 exception's elapsed time was min'd into the
     // headline, so a query that broke BETWEEN passes looked like it got
     // 100x faster instead of visibly failing).
-    def sample(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def sample(name: String,
+               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Option[Double] = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case _: Throwable => None }
+      catch { case NonFatal(e) => logFailure(name, e); None }
     }
     // Optional local-tuning filter (regex over query names) — the driver
     // never sets it, so driver benches always cover the full registry.
@@ -228,7 +222,7 @@ object Bench {
     // sorted order: deterministic run sequence, comparable round-over-round
     val results = SparkEntry.queries.toVector.filter(kv => keep(kv._1))
       .sortBy(_._1).map { case (name, fn) =>
-        name -> sample(fn)
+        name -> sample(name, fn)
       }.toMap
     val failed = results.collect { case (n, None) => n }.toVector.sorted
     // Full per-query map on stderr for local tuning (never on stdout — the
@@ -258,12 +252,12 @@ object Bench {
     // keeps its pass-1 time, one failing on both passes is simply absent
     // from `queries` and listed under `failed`.
     val second = headline.filter(keep).flatMap { h =>
-      SparkEntry.queries.get(h).flatMap(sample).map(h -> _)
+      SparkEntry.queries.get(h).flatMap(sample(h, _)).map(h -> _)
     }.toMap
+    // one headline map, rendered into both stdout and bench_full.json
     val qs = headline.flatMap { h =>
-      val best = (results.get(h).flatten.toSeq ++ second.get(h).toSeq)
-        .minOption
-      best.map(v => s"\"$h\":${r3(v)}")
+      (results.get(h).flatten.toSeq ++ second.get(h).toSeq).minOption
+        .map(v => s"\"$h\":${r3(v)}")
     }.mkString("{", ",", "}")
     // `value`/`n_queries` cover the PRODUCTION queries; the
     // deliberately-superlinear diagnostics (see `diagnostics` — currently
@@ -295,19 +289,16 @@ object Bench {
     // the ~180 non-headline queries was unattributable from driver
     // artifacts in r21. bench_full.json makes every total auditable
     // query-by-query; it is measurement output only — nothing reads it.
+    // A filtered local run marks itself, so its subset total is never
+    // mistaken for the full registry's.
     try {
       val fp = results.collect { case (n, Some(v)) => s""""$n":${r3(v)}""" }
         .toVector.sorted.mkString("{", ",", "}")
-      val m2 = (headline.filter(keep).flatMap { h =>
-        (results.get(h).flatten.toSeq ++ second.get(h).toSeq).minOption
-          .map(v => s""""$h":${r3(v)}""")
-      }).mkString("{", ",", "}")
-      val json = s"""{"sf":"$sfDir","cpus":$cpus,"hmode_first_pass":"cold-ish single sample","first_pass":$fp,"min2warm_headline":$m2,"diag":$diagJson,"total_first_pass_production":$total,"diag_sec":$diagSec$failedJson}"""
+      val onlyJson = only.fold("")(r => s""","only":${Verify.jsonString(r.regex)}""")
+      val json = s"""{"sf":"$sfDir","cpus":$cpus$onlyJson,"hmode_first_pass":"cold-ish single sample","first_pass":$fp,"min2warm_headline":$qs,"diag":$diagJson,"total_first_pass_production":$total,"diag_sec":$diagSec$failedJson}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_full.json write failed: ${e.getMessage}")
-    }
+    } catch { case NonFatal(e) => logFailure("bench_full.json write", e) }
     spark.catalog.clearCache()
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: `runMain graft.Explain <query> [sfDir]` prints
   * the formatted physical plan and a warmed timing for one registered query
   * (no args: lists query names). The perf loop is: run this, read the plan,
@@ -15,14 +13,7 @@ object Explain {
     }
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm: JIT + codegen + file index
     val t0 = System.nanoTime()

@@ -341,6 +341,7 @@ object ExtensionQueries {
     * (ccos, −cell) lexicographic max IS this window's (cos desc, cell asc)
     * first row.
     */
+  // default input spells `FROM e`, not `FROM e e`: oracle text byte-identical to pre-044bf48
   private def kmAssignCte(name: String, centCte: String,
       input: String = "e"): String = s"""
       $name AS (

@@ -38,14 +38,9 @@ object ScaleUp {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val shiftDays = args.lift(3).map(_.toInt).getOrElse(0)
     val clusterBoost = args.lift(4).map(_.toDouble).getOrElse(0.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed 8 cores, not SPARK_GRAFT_CPUS: scan splits follow
+    // defaultParallelism, so the written file layout would follow the host
+    val spark = GraftSession.local(8)
     scaleAll(spark, srcDir, outDir, factor, shiftDays, clusterBoost)
     spark.stop()
   }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import graft.functions.CosineSimilarity
 
 /** SparkSessionExtensions registration point for the engine's native
-  * functions, so SQL users get them too:
+  * functions and optimizer rules. Every session built by
+  * [[graft.GraftSession.local]] installs it, so SQL users get them too:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  *   val spark = graft.GraftSession.local(4)
   *   spark.sql("SELECT cosine_sim(a.embedding, b.embedding) ...")
   * }}}
   *
@@ -30,9 +31,8 @@ object GraftExtensions {
   type Registration =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  /** Every native function the SQL surface exposes. Public so tests (and
-    * harnesses that manage their own registry) can register the exact
-    * builders the extension injects.
+  /** Every native function the SQL surface exposes (GraftSessionSpec
+    * resolves each one through SQL).
     */
   val registrations: Seq[Registration] = Seq(
     simple("cosine_sim", classOf[CosineSimilarity].getName, 2,
@@ -66,7 +66,13 @@ object GraftExtensions {
         org.apache.spark.sql.catalyst.expressions.Cast(e(0),
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)),
         org.apache.spark.sql.catalyst.expressions.Cast(e(1),
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))))
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))),
+    // cast to string like the Column entry point (numbers hash their
+    // decimal rendering)
+    simple("md5_hash48", classOf[graft.functions.Md5Hash48].getName, 1,
+      e => graft.functions.Md5Hash48(
+        org.apache.spark.sql.catalyst.expressions.Cast(e(0),
+          org.apache.spark.sql.types.StringType))))
 
   private def simple(name: String, className: String, arity: Int,
                      build: Seq[Expression] => Expression): Registration =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc: Lloyd convergence depth of s32's k-means at a fixture scale —
@@ -12,13 +11,7 @@ object KmDepth {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cap = args.lift(1).map(_.toInt)
       .getOrElse(graft.ExtensionQueries8.KmConvMaxIters)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     val sampleN = args.lift(2).map(_.toInt).getOrElse(0) // 0 = full corpus
     val full = graft.ExtensionQueries.embeddingsD(spark, sfDir)
       .select(col("vec_id"), col("v"))

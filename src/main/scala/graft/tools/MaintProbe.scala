@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc: measures s41's incremental graph maintenance against the
@@ -34,13 +33,7 @@ object MaintProbe {
       .getOrElse(graft.ExtensionQueries3.GraphCapR)
     val nprobe = args.lift(4).map(_.toInt)
       .getOrElse(graft.ExtensionQueries.IvfProbe)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     import graft.{ExtensionQueries, ExtensionQueries3, ExtensionQueries10}
     val e = ExtensionQueries.embeddingsD(spark, dir)
       .select(col("vec_id"), col("v")).persist()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query profiler: times the build (eager checkpoints land
   * here) and the count action separately, for the queries named in args.
   * `runMain graft.tools.Profile <sfDir> <query...>`
@@ -10,13 +8,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("d07_dedup_clusters")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     try graft.SparkEntry.queries("q01_dim_decode_join")(spark, sfDir).count()
     catch { case _: Throwable => () }
     names.foreach { name =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc: measures s47's two-level routed assignment against the flat
@@ -19,13 +18,7 @@ import org.apache.spark.sql.functions._
 object RouteProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     import graft.{ExtensionQueries, ExtensionQueries11}
     val e = ExtensionQueries.embeddingsD(spark, dir)
       .select(col("vec_id"), col("v")).persist()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc A/B for the summary sink's file layout: the sorted flagship
   * written (a) as-is — does AQE's partition coalescing already pack the
   * sort's range exchange? — (b) through hint("rebalance"), (c) through
@@ -13,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object SinkProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     import org.apache.spark.sql.functions._
 
     val summary = graft.pipeline.LocationSummary.build(spark, sfDir).persist()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures how input-split sizing parallelizes the fixture scans: for a
   * given `spark.sql.files.openCostInBytes`, prints each table's scan task
   * count and times the q99-style fused catalog pass over lineitem.
@@ -12,14 +10,8 @@ object SplitProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val openCost = args.lift(1).getOrElse("4194304")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", openCost)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus,
+      "spark.sql.files.openCostInBytes" -> openCost)
     import org.apache.spark.sql.functions._
     graft.sources.Tables.all.foreach { t =>
       val df = graft.sources.Tables.load(spark, sfDir, t)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc: wall-clock + equality comparison of the two exact-CC
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
 object StarCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     val feats = graft.ExtensionQueries.docFeatures(spark, sfDir)
     val pairs = graft.operators.Dedup
       .lshCandidatePairs(feats, bands = 4, rows = 3).localCheckpoint()

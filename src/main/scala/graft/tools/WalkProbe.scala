@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,13 +32,7 @@ object WalkProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val perCluster = args.lift(1).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     import graft.{ExtensionQueries, ExtensionQueries3, ExtensionQueries8}
     val g = ExtensionQueries3.knnGraph(spark, dir,
         ExtensionQueries.IvfProbe, Some(ExtensionQueries3.GraphCapR))

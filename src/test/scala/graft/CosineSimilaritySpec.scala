@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.CosineSimilarity
+import graft.SparkTestSession.portable
 import graft.operators.VectorOps
 
 class CosineSimilaritySpec extends AnyFunSuite {
@@ -18,11 +16,11 @@ class CosineSimilaritySpec extends AnyFunSuite {
     val a = e.select(col("vec_id").as("ia"), col("v").as("va"))
     val b = e.select(col("vec_id").as("ib"), col("v").as("vb"))
     val pairs = a.join(b, col("ia") < col("ib") && col("ib") <= col("ia") + 3)
-    val diffs = pairs
+    val diffs = portable(pairs
       .withColumn("slow", VectorOps.cosine(col("va"), col("vb")))
       .withColumn("fast", VectorOps.cosineFast(col("va"), col("vb")))
       .filter(col("slow") =!= col("fast")) // exact bit comparison
-      .count()
+      .count())
     assert(diffs == 0)
   }
 
@@ -40,9 +38,9 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("length mismatch yields null in both forms (no silent truncation)") {
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
-    val got = df.select(
+    val got = portable(df.select(
       VectorOps.cosine(col("a"), col("b")).as("slow"),
-      VectorOps.cosineFast(col("a"), col("b")).as("fast")).first
+      VectorOps.cosineFast(col("a"), col("b")).as("fast")).first)
     assert(got.isNullAt(0) && got.isNullAt(1))
   }
 
@@ -53,9 +51,9 @@ class CosineSimilaritySpec extends AnyFunSuite {
       (Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(3.0), Some(4.0))))
     ).toDF("a", "b")
     // codegen path and portable fold agree (null-safe equality over all rows)
-    val disagree = df.filter(
+    val disagree = portable(df.filter(
       !(VectorOps.cosineFast(col("a"), col("b")) <=> VectorOps.cosine(col("a"), col("b")))
-    ).count()
+    ).count())
     assert(disagree == 0)
     val got = df.select(VectorOps.cosineFast(col("a"), col("b"))).collect()
     assert(got(0).isNullAt(0) && got(1).isNullAt(0) && !got(2).isNullAt(0))
@@ -73,13 +71,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("cosine_sim is SQL-callable once registered (GraftExtensions wiring)") {
-    // getOrCreate reuses the shared session, so register through the same
-    // builder function GraftExtensions injects.
-    spark.sessionState.functionRegistry.registerFunction(
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(exprs(0), exprs(1)))
     val got = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").first.getDouble(0)
     assert(math.abs(got - 1.0) < 1e-12)

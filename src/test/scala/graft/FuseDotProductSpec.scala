@@ -3,19 +3,15 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestSession.portable
 import graft.operators.VectorOps
-import graft.plans.FuseDotProduct
 
+/** The shared session installs FuseDotProduct (GraftExtensions); the
+  * portable arms run with the rule excluded.
+  */
 class FuseDotProductSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private def withRule[A](body: => A): A = {
-    spark.experimental.extraOptimizations ++= Seq(FuseDotProduct)
-    try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == FuseDotProduct)
-  }
 
   private val edgeDf = Seq(
     (0, Some(Seq(Some(1.5), Some(-2.0), Some(3.25))), Some(Seq(Some(2.0), Some(0.5), Some(-1.0)))),
@@ -32,14 +28,12 @@ class FuseDotProductSpec extends AnyFunSuite {
     def query() = edgeDf
       .select(col("idx"), VectorOps.dot(col("a"), col("b")).as("d"))
       .orderBy(col("idx"))
-    val portable = query().collect()
-    val (fused, plan) = withRule {
-      val df = query()
-      (df.collect(), df.queryExecution.optimizedPlan.toString)
-    }
+    val unfused = portable(query().collect())
+    val df = query()
+    val (fused, plan) = (df.collect(), df.queryExecution.optimizedPlan.toString)
     assert(plan.contains("dot_product"), s"rule did not fire:\n$plan")
     assert(!plan.contains("aggregate(zip_with"))
-    portable.zip(fused).foreach { case (p, f) =>
+    unfused.zip(fused).foreach { case (p, f) =>
       assert(p.isNullAt(1) == f.isNullAt(1))
       if (!p.isNullAt(1))
         assert(java.lang.Double.doubleToRawLongBits(p.getDouble(1)) ==
@@ -58,12 +52,10 @@ class FuseDotProductSpec extends AnyFunSuite {
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (acc, v) -> acc + v * 2.0d)",
       // zip lambda multiplies a variable with itself
       "aggregate(zip_with(a, b, (x, y) -> x * x), 0.0d, (acc, v) -> acc + v)")
-    withRule {
-      cases.foreach { e =>
-        val plan = edgeDf.selectExpr(s"$e AS d")
-          .queryExecution.optimizedPlan.toString
-        assert(!plan.contains("dot_product"), s"rule wrongly fired on: $e\n$plan")
-      }
+    cases.foreach { e =>
+      val plan = edgeDf.selectExpr(s"$e AS d")
+        .queryExecution.optimizedPlan.toString
+      assert(!plan.contains("dot_product"), s"rule wrongly fired on: $e\n$plan")
     }
   }
 
@@ -77,13 +69,11 @@ class FuseDotProductSpec extends AnyFunSuite {
     def query() = intDf.selectExpr("idx",
       "aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v) AS d")
       .orderBy("idx")
-    val portable = query().collect()
-    val (fused, plan) = withRule {
-      val df = query()
-      (df.collect(), df.queryExecution.optimizedPlan.toString)
-    }
+    val unfused = portable(query().collect())
+    val df = query()
+    val (fused, plan) = (df.collect(), df.queryExecution.optimizedPlan.toString)
     assert(plan.contains("int_dot"), s"rule did not fire:\n$plan")
-    portable.zip(fused).foreach { case (p, f) =>
+    unfused.zip(fused).foreach { case (p, f) =>
       assert(p.isNullAt(1) == f.isNullAt(1))
       if (!p.isNullAt(1)) assert(p.getLong(1) == f.getLong(1))
     }
@@ -97,12 +87,8 @@ class FuseDotProductSpec extends AnyFunSuite {
   test("SQL spelling through the fold is fused too, on real embeddings") {
     val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-    val portable = e.select(col("vec_id"), VectorOps.dot(col("v"), col("v")).as("d"))
+    def dots() = e.select(col("vec_id"), VectorOps.dot(col("v"), col("v")).as("d"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val fused = withRule {
-      e.select(col("vec_id"), VectorOps.dot(col("v"), col("v")).as("d"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    }
-    assert(portable == fused)
+    assert(portable(dots()) == dots())
   }
 }

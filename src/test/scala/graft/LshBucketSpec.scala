@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkTestSession.portable
 import graft.operators.VectorOps
 
 class LshBucketSpec extends AnyFunSuite {
@@ -12,10 +13,10 @@ class LshBucketSpec extends AnyFunSuite {
     val e = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select(VectorOps.toDouble(col("embedding")).as("v"))
     for (planes <- Seq(6, 8)) {
-      val diff = e.select(
+      val diff = portable(e.select(
           VectorOps.lshBucket(col("v"), planes, 64).as("a"),
           VectorOps.lshBucketFast(col("v"), planes, 64).as("b"))
-        .filter(col("a") =!= col("b")).count()
+        .filter(col("a") =!= col("b")).count())
       assert(diff == 0)
     }
   }
@@ -26,9 +27,9 @@ class LshBucketSpec extends AnyFunSuite {
       Seq[Option[Double]](Some(1.0), None, Some(3.0), Some(4.0)),
       Seq[Option[Double]](Some(1.0), Some(2.0), Some(3.0), Some(4.0))
     ).toDF("v")
-    val got = df.select(
+    val got = portable(df.select(
       VectorOps.lshBucket(col("v"), 4, 4).as("slow"),
-      VectorOps.lshBucketFast(col("v"), 4, 4).as("fast")).collect()
+      VectorOps.lshBucketFast(col("v"), 4, 4).as("fast")).collect())
     assert(got(0).getLong(0) == got(0).getLong(1) && got(0).getLong(1) == 0L)
     // all-planes-negative can legitimately give 0; only parity is asserted
     assert(got(1).getLong(0) == got(1).getLong(1))

@@ -184,9 +184,9 @@ class PropertySpec extends AnyFunSuite {
       val df = batch.toDF("a", "b")
       val native = df.select(graft.functions.IntDotProduct.intDot($"a", $"b"))
         .as[Long].collect().toSeq
-      val fold = df.select(
+      val fold = SparkTestSession.portable(df.select(
         aggregate(zip_with($"a", $"b", (x, y) => x * y), lit(0L), (acc, v) => acc + v))
-        .as[Long].collect().toSeq
+        .as[Long].collect().toSeq)
       assert(native === fold)
       // and both equal the plain Scala loop
       val scala_ = batch.map { case (a, b) =>
@@ -200,11 +200,11 @@ class PropertySpec extends AnyFunSuite {
     // on long overflow. The native expression must not silently wrap where
     // the expression it replaces errors — failOnError captures the conf.
     val df = Seq((Seq(Long.MaxValue / 2 + 1L, 0L), Seq(4L, 0L))).toDF("a", "b")
-    intercept[Exception] {
+    SparkTestSession.portable(intercept[Exception] {
       df.select(
         aggregate(zip_with($"a", $"b", (x, y) => x * y), lit(0L), (acc, v) => acc + v))
         .collect()
-    }
+    })
     intercept[Exception] {
       df.select(graft.functions.IntDotProduct.intDot($"a", $"b")).collect()
     }

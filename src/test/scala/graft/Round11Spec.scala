@@ -401,9 +401,9 @@ class Round11Spec extends AnyFunSuite {
       (Seq.empty[Long], Seq.empty[Long]))
       .toDF("a", "b")
     val native = df.select(intDot($"a", $"b")).collect().map(_.get(0)).toSeq
-    val fold = df.select(
+    val fold = SparkTestSession.portable(df.select(
       aggregate(zip_with($"a", $"b", (x, y) => x * y), lit(0L), (acc, x) => acc + x))
-      .collect().map(_.get(0)).toSeq
+      .collect().map(_.get(0)).toSeq)
     assert(native === fold)
     assert(native === Seq(32L, 0L, 0L))
     // length mismatch and null element both -> null, like the fold
@@ -413,10 +413,7 @@ class Round11Spec extends AnyFunSuite {
       .toDF("a", "b")
     val got = edges.select(intDot($"a", $"b")).collect()
     assert(got.forall(_.isNullAt(0)))
-    // SQL surface registration
-    graft.plans.GraftExtensions.registrations.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
+    // SQL surface
     df.createOrReplaceTempView("r11_intdot")
     assert(spark.sql("SELECT int_dot(a, b) AS d FROM r11_intdot ORDER BY d")
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 0L, 32L))

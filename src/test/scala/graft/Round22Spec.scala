@@ -47,6 +47,29 @@ class Round22Spec extends AnyFunSuite {
     assert(bad.count() == 0, bad.take(5).mkString("\n"))
   }
 
+  test("md5_hash48 through SQL equals the Column form, casts included") {
+    import spark.implicits._
+    Seq[(String, java.lang.Long)](("abc", 7L), ("café", -1L), (null, null))
+      .toDF("s", "n").createOrReplaceTempView("r22_md5")
+    val viaSql = spark.sql(
+      "SELECT md5_hash48(s), md5_hash48(n), md5_hash48(1.5D) FROM r22_md5").collect()
+    val viaApi = spark.table("r22_md5").select(
+      graft.functions.Md5Hash48.md5Hash48(col("s")),
+      graft.functions.Md5Hash48.md5Hash48(col("n")),
+      graft.functions.Md5Hash48.md5Hash48(lit(1.5))).collect()
+    assert(viaSql.toSeq == viaApi.toSeq)
+    assert(viaSql(2).isNullAt(0) && viaSql(2).isNullAt(1))
+  }
+
+  test("md5_hash48 over a non-string child fails at analysis") {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val raw = ColumnBridge.column(graft.functions.Md5Hash48(
+      ColumnBridge.expression(lit(42L))))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(raw))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+  }
+
   test("md5_hash48 runs as the native expression in the sketch hot paths") {
     // q89 hashes live in its returned plan (q96/q99 hash inside their
     // artifact-build side effect, which the returned serve plan no longer
